@@ -835,11 +835,9 @@ def run_pagerank_throughput(
         "median_superstep_secs": round(median, 3),
         "total_superstep_secs": round(sum(secs), 3),
         "edges_per_sec_per_superstep": round(n_edges / median, 1),
-        "salted": bool(m0.get("salted")),
         "salted_join": bool(m0.get("salted_join")),
         "skew_ratio_dst": m0.get("skew_ratio_dst"),
         "skew_ratio_src": m0.get("skew_ratio_src"),
-        "n_hot_keys": m0.get("n_hot_keys"),
         "n_hot_src": m0.get("n_hot_src"),
     }
 
@@ -955,7 +953,7 @@ def run_scaling(n_low: int, n_high: int, n_vertices: int, n_edges: int, superste
     # auto-engages and must beat the forced-plain run. (The dst-skewed graph
     # above does not engage join salting: its hubs are absorbed by partial
     # agg; a measured 0.81× throughput for two-stage agg salting there is why
-    # PGS_SALT_AGG is opt-in — see pagerank.py docstring.)
+    # PageRank has no aggregation-side salting — see pagerank.py docstring.)
     skew_vertices = int(os.environ.get("PGS_SKEW_VERTICES", str(max(n_vertices // 200, 1000))))
     skew_path = f"/tmp/pgs_bench_srcskew_{skew_vertices}_{n_edges}"
     if not os.path.exists(skew_path + "/_SUCCESS"):
@@ -971,7 +969,10 @@ def run_scaling(n_low: int, n_high: int, n_vertices: int, n_edges: int, superste
     # scheduling waves the scheduler itself absorbs it (measured series in
     # BENCH/BASELINE.md). Plain runs FIRST so the warm-cache bias, if any,
     # favors the salted run's competitor.
-    plain_sk = worker(n_high, {"PGS_SALT_DISABLE": "1"}, edges_path=skew_path, parts=n_high)
+    # A degree floor above any edge count forces the plain gather join.
+    plain_sk = worker(
+        n_high, {"PGS_SALT_MIN_DEGREE": "1000000000000"}, edges_path=skew_path, parts=n_high
+    )
     salted_sk = worker(n_high, edges_path=skew_path, parts=n_high)
 
     # Machine-ceiling probe: what does a bare scan+sum of the SAME table
@@ -1222,8 +1223,8 @@ local[{n_high}], fresh JVMs:
 
 | path | salted join engaged | median steady (s) | edges/sec/superstep |
 |---|---|---|---|
-| auto (default) | {salted_sk['salted']} | {salted_sk['median_superstep_secs']} | {salted_sk['edges_per_sec_per_superstep']:,.0f} |
-| forced plain (PGS_SALT_DISABLE=1) | {plain_sk['salted']} | {plain_sk['median_superstep_secs']} | {plain_sk['edges_per_sec_per_superstep']:,.0f} |
+| auto (default) | {salted_sk['salted_join']} | {salted_sk['median_superstep_secs']} | {salted_sk['edges_per_sec_per_superstep']:,.0f} |
+| forced plain (PGS_SALT_MIN_DEGREE=10^12) | {plain_sk['salted_join']} | {plain_sk['median_superstep_secs']} | {plain_sk['edges_per_sec_per_superstep']:,.0f} |
 
 salted/plain throughput ratio: **{report['skew_split']['salted_vs_plain']}**
 (correctness equality asserted in
@@ -1236,11 +1237,11 @@ salting turns on only when max out-degree exceeds both the degree floor and
 
 AGGREGATION-side skew (hub IN-degree, the dst-Zipf scaling graph above:
 skew_ratio_dst ~{hi.get('skew_ratio_dst')}x) deliberately does NOT engage
-salting by default: Spark's map-side partial aggregation already compresses a
+salting: Spark's map-side partial aggregation already compresses a
 hub dst key to at most one partial row per task, and we MEASURED the flagged
 two-stage salted sum at 0.81x plain throughput on this graph (the second
-|V|-row exchange is pure overhead). It remains available via PGS_SALT_AGG=1
-for aggregations partial-agg cannot combine. Measurement over assumption.
+|V|-row exchange is pure overhead), so PageRank no longer has that path.
+Measurement over assumption.
 
 Reproduce: `python bench.py --scaling`. Extra pinned repeats of a headline
 level (run via `--throughput-worker` under the same taskset/partitions

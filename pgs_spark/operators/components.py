@@ -16,8 +16,6 @@ driver loop stays flat.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -102,11 +100,6 @@ def connected_components(
         .distinct()
         .persist()
     )
-    tmp = None
-    if work_dir is None and os.environ.get("PGS_CC_SPILL_STATE"):
-        work_dir = tmp = tempfile.mkdtemp(
-            prefix="pgs_cc_", dir=os.environ.get("PGS_SPARK_LOCAL_DIR") or None
-        )
     cp = None
     start_round = 0
     sig = None

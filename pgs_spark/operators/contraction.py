@@ -152,108 +152,113 @@ def merge_to_k(
             # shuffle plans.
             _b = F.broadcast if use_local else (lambda df: df)
             sizes = groups.groupBy("g").agg(F.count("*").alias("sz"))
-            if use_local:
-                # materialize the ≤n_groups-row table once (persist, NOT a
-                # localCheckpoint — 4 chained checkpoints/round hit the
-                # geometric plan-degradation trap layout.py documents): it
-                # feeds four consumers across this round's jobs (two adj
-                # joins, cand, mapping) and several are broadcast builds —
-                # without this, each build re-runs the groupBy subtree
-                sizes = sizes.persist()
-                sizes.count()
-            keep = sizes.orderBy(F.col("sz").desc(), F.col("g").desc()).limit(k)
-            cand = sizes.join(_b(keep.select("g")), "g", "left_anti")
-            # group-level adjacency, both directions, with sizes on both
-            # sides (gedges is canonical loop-free — maintained below; no
-            # distinct: the per-group struct-MIN below is dup-insensitive)
-            gsym = gedges.union(
-                gedges.select(F.col("gb").alias("ga"), F.col("ga").alias("gb"))
-            )
-            adj = (
-                gsym.join(_b(sizes.select(F.col("g").alias("ga"), F.col("sz").alias("sza"))), "ga")
-                .join(_b(sizes.select(F.col("g").alias("gb"), F.col("sz").alias("szb"))), "gb")
-            )
-            targets = (
-                adj.join(_b(cand.select(F.col("g").alias("ga"))), "ga", "left_semi")
-                .filter(
-                    (F.col("szb") > F.col("sza"))
-                    | ((F.col("szb") == F.col("sza")) & (F.col("gb") > F.col("ga")))
+            # per-round cached tables, unpersisted even if the round raises
+            mapping = None
+            try:
+                if use_local:
+                    # materialize the ≤n_groups-row table once (persist, NOT a
+                    # localCheckpoint — 4 chained checkpoints/round hit the
+                    # geometric plan-degradation trap layout.py documents): it
+                    # feeds four consumers across this round's jobs (two adj
+                    # joins, cand, mapping) and several are broadcast builds —
+                    # without this, each build re-runs the groupBy subtree
+                    sizes = sizes.persist()
+                    sizes.count()
+                keep = sizes.orderBy(F.col("sz").desc(), F.col("g").desc()).limit(k)
+                cand = sizes.join(_b(keep.select("g")), "g", "left_anti")
+                # group-level adjacency, both directions, with sizes on both
+                # sides (gedges is canonical loop-free — maintained below; no
+                # distinct: the per-group struct-MIN below is dup-insensitive)
+                gsym = gedges.union(
+                    gedges.select(F.col("gb").alias("ga"), F.col("ga").alias("gb"))
                 )
-                .groupBy("ga")
-                .agg(F.min(F.struct(F.col("szb"), F.col("gb"))).alias("t"))
-                .select(F.col("ga").alias("g"), F.col("t.gb").alias("tgt"))
-            )
-            # total mapping with identity default, then J pointer jumps
-            mapping = sizes.select("g").join(_b(targets), "g", "left").select(
-                "g", F.coalesce("tgt", F.col("g")).alias("tgt")
-            )
-            for _ in range(jumps):
-                nxt = mapping.select(F.col("g").alias("tgt"), F.col("tgt").alias("tgt2"))
-                mapping = mapping.join(_b(nxt), "tgt").select(
-                    "g", F.col("tgt2").alias("tgt")
+                adj = (
+                    gsym.join(_b(sizes.select(F.col("g").alias("ga"), F.col("sz").alias("sza"))), "ga")
+                    .join(_b(sizes.select(F.col("g").alias("gb"), F.col("sz").alias("szb"))), "gb")
                 )
-            if use_local:
-                # the resolved mapping feeds three broadcast builds (groups
-                # relabel, ma, mb) — materialize its subtree (which contains
-                # the full adj aggregation) exactly once
-                mapping = mapping.persist()
-                mapping.count()
-            # explicit rename, not `groups.g == mapping.g`: once both sides
-            # are checkpointed their `g` attributes share an exprId and the
-            # qualified condition degenerates to a trivially-true predicate
-            # (cross join) — the rename keeps the equi-join unambiguous
-            new_groups = groups.join(
-                _b(mapping.select(F.col("g").alias("mg"), "tgt")),
-                F.col("g") == F.col("mg"),
-            ).select("id", F.col("tgt").alias("g"))
-            ma = mapping.select(F.col("g").alias("ga"), F.col("tgt").alias("ta"))
-            mb = mapping.select(F.col("g").alias("gb"), F.col("tgt").alias("tb"))
-            new_gedges = (
-                gedges.join(_b(ma), "ga")
-                .join(_b(mb), "gb")
-                .select(
-                    F.least("ta", "tb").alias("ga"),
-                    F.greatest("ta", "tb").alias("gb"),
+                targets = (
+                    adj.join(_b(cand.select(F.col("g").alias("ga"))), "ga", "left_semi")
+                    .filter(
+                        (F.col("szb") > F.col("sza"))
+                        | ((F.col("szb") == F.col("sza")) & (F.col("gb") > F.col("ga")))
+                    )
+                    .groupBy("ga")
+                    .agg(F.min(F.struct(F.col("szb"), F.col("gb"))).alias("t"))
+                    .select(F.col("ga").alias("g"), F.col("t.gb").alias("tgt"))
                 )
-                .filter(F.col("ga") != F.col("gb"))
-                .distinct()
-            )
-            if cp is not None:
-                # groups first, manifest=False: no manifest exists for round r
-                # until BOTH snapshots are on disk (crash → resume at r-1)
-                groups = cp.save(new_groups, r, lineage=False, suffix="g", manifest=False)
-                if fixed_rounds is None:
-                    n_groups = groups.select("g").distinct().count()
-                gedges = cp.save(
-                    new_gedges,
-                    r,
-                    suffix="e",
-                    metrics={
-                        "groups_path": groups._pgs_snapshot_path,
-                        "n_groups": n_groups,
-                        "converged": fixed_rounds is None and n_groups <= k,
-                    },
-                    lineage=False,
+                # total mapping with identity default, then J pointer jumps
+                mapping = sizes.select("g").join(_b(targets), "g", "left").select(
+                    "g", F.coalesce("tgt", F.col("g")).alias("tgt")
                 )
-                _gc_orphan_states(cp)
-            else:
-                groups = _snap(new_groups, f"g_{r % 2}")
-                gedges = _snap(new_gedges, f"ge_{r % 2}")
-                if fixed_rounds is None:
-                    # stop test costs one distinct-count per round — skipped
-                    # in fixed-round (oracle) mode
-                    n_groups = groups.select("g").distinct().count()
-            if use_local:
-                sizes.unpersist()
-                mapping.unpersist()
+                for _ in range(jumps):
+                    nxt = mapping.select(F.col("g").alias("tgt"), F.col("tgt").alias("tgt2"))
+                    mapping = mapping.join(_b(nxt), "tgt").select(
+                        "g", F.col("tgt2").alias("tgt")
+                    )
+                if use_local:
+                    # the resolved mapping feeds three broadcast builds (groups
+                    # relabel, ma, mb) — materialize its subtree (which contains
+                    # the full adj aggregation) exactly once
+                    mapping = mapping.persist()
+                    mapping.count()
+                # explicit rename, not `groups.g == mapping.g`: once both sides
+                # are checkpointed their `g` attributes share an exprId and the
+                # qualified condition degenerates to a trivially-true predicate
+                # (cross join) — the rename keeps the equi-join unambiguous
+                new_groups = groups.join(
+                    _b(mapping.select(F.col("g").alias("mg"), "tgt")),
+                    F.col("g") == F.col("mg"),
+                ).select("id", F.col("tgt").alias("g"))
+                ma = mapping.select(F.col("g").alias("ga"), F.col("tgt").alias("ta"))
+                mb = mapping.select(F.col("g").alias("gb"), F.col("tgt").alias("tb"))
+                new_gedges = (
+                    gedges.join(_b(ma), "ga")
+                    .join(_b(mb), "gb")
+                    .select(
+                        F.least("ta", "tb").alias("ga"),
+                        F.greatest("ta", "tb").alias("gb"),
+                    )
+                    .filter(F.col("ga") != F.col("gb"))
+                    .distinct()
+                )
+                if cp is not None:
+                    # groups first, manifest=False: no manifest exists for round r
+                    # until BOTH snapshots are on disk (crash → resume at r-1)
+                    groups = cp.save(new_groups, r, lineage=False, suffix="g", manifest=False)
+                    if fixed_rounds is None:
+                        n_groups = groups.select("g").distinct().count()
+                    gedges = cp.save(
+                        new_gedges,
+                        r,
+                        suffix="e",
+                        metrics={
+                            "groups_path": groups._pgs_snapshot_path,
+                            "n_groups": n_groups,
+                            "converged": fixed_rounds is None and n_groups <= k,
+                        },
+                        lineage=False,
+                    )
+                    _gc_orphan_states(cp)
+                else:
+                    groups = _snap(new_groups, f"g_{r % 2}")
+                    gedges = _snap(new_gedges, f"ge_{r % 2}")
+                    if fixed_rounds is None:
+                        # stop test costs one distinct-count per round — skipped
+                        # in fixed-round (oracle) mode
+                        n_groups = groups.select("g").distinct().count()
+            finally:
+                if use_local:
+                    sizes.unpersist()
+                    if mapping is not None:
+                        mapping.unpersist()
             rounds = r
             if fixed_rounds is None:
                 history.append({"round": r, "n_groups": n_groups})
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default_p)
+        edges.unpersist()
     if fixed_rounds is not None:
         n_groups = groups.select("g").distinct().count()
-    edges.unpersist()
     return MergeToKResult(groups.select("id", F.col("g").alias("group")), rounds, n_groups, history)
 
 

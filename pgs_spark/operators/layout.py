@@ -197,6 +197,9 @@ def fr_layout(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default_p)
         spark.conf.set("spark.sql.adaptive.enabled", default_aqe)
+        # the superstep's temp views must not outlive the loop in the catalog
+        spark.catalog.dropTempView("__pgs_fr_pos")
+        spark.catalog.dropTempView("__pgs_fr_sym")
     sym.unpersist()
     verts.unpersist()
     return LayoutResult(pos, done_it, history)

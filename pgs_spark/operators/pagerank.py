@@ -12,9 +12,9 @@ tolerance with a max-pass guard).
 Spark plan per superstep (sparse gather-scatter — ONE job):
   contribs = weighted_edges ⋈ ranks on src        (hash join; edges side is
              pre-hash-partitioned on src once, so only the small ranks side
-             shuffles each superstep; AQE skew-join splits hub partitions)
-  gathered = contribs.groupBy(dst).sum            (map-side partial agg; an
-             optional salted two-stage agg splits hub dst keys explicitly)
+             shuffles each superstep; out-degree hubs get a salted join)
+  gathered = contribs.groupBy(dst).sum            (map-side partial agg
+             compresses in-degree hubs to one partial row per task)
   ranks'   = (1-α)/N + α·(gathered + dangling_mass/N)
   write    = ranks' (id, rank only) → parquet snapshot, with delta and the
              next superstep's dangling mass collected by DataFrame.observe()
@@ -46,8 +46,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators import skew
 from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
+
+# A src key is a hub only at this multiple of the mean out-degree.
+SALT_RATIO = 16.0
 
 
 @dataclass
@@ -65,9 +67,7 @@ def pagerank(
     tol: float = 1e-6,
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
-    salt_buckets: int | None = None,
     num_partitions: int | None = None,
-    collect_skew_metrics: bool = False,
     fixed_iterations: int | None = None,
     weight_col: str | None = None,
     extrapolate: bool = False,
@@ -95,32 +95,22 @@ def pagerank(
     centrality over a 100-TB link graph; arbitrary seed tables can be
     re-keyed into a slice upstream.
 
-    Heavy-hitter skew splitting AUTO-ENGAGES on the side where skew actually
-    hurts — the GATHER JOIN. The persisted edge table is hash-partitioned on
-    src, so a hub *out*-degree (one vertex fanning its rank to millions of
-    edges) lands that vertex's entire edge block in ONE task: a per-superstep
-    straggler nothing downstream can rebalance. When the build pass finds
-    out-degree crossing both an absolute floor (PGS_SALT_MIN_DEGREE, default
-    100k) and a relative ratio (PGS_SALT_RATIO × mean, default 16), hot src
-    keys get a dst-derived salt baked into the persisted partitioning
-    (src, _salt) and the per-superstep rank vector is exploded ×buckets for
-    just those keys — the literal "salted hash join … heavy-hitter skew
-    splitting" of the north rule, splitting each hub block across `buckets`
-    tasks. Results are numerically equivalent to the plain path: same
-    contribution rows, same aggregation — only the float summation ORDER of
-    the dst partial sums can differ (at most last-ulp drift; the equality
-    test asserts atol=1e-12, not bit equality).
+    Heavy-hitter skew splitting engages automatically on the gather join.
+    The persisted edge table is hash-partitioned on src, so a hub
+    *out*-degree lands that vertex's whole edge block in ONE task: a
+    per-superstep straggler nothing downstream can rebalance. When the build
+    pass finds a max out-degree at or above an absolute floor
+    (PGS_SALT_MIN_DEGREE, default 100k), SALT_RATIO × the mean, and 1.5 × one
+    partition's edge share, hot src keys get a dst-derived salt baked into
+    the persisted partitioning (src, _salt) and only their rank rows are
+    exploded ×buckets per superstep. Contribution rows and the aggregation
+    are the plain path's; only the float summation order of the dst partial
+    sums can differ (last-ulp drift).
 
-    Hub *in*-degree (many edges pointing AT one vertex) is measured and
-    recorded in every manifest (`skew_ratio_dst`) but does NOT trigger agg
-    salting by default: Spark's map-side partial aggregation already
-    compresses a hub dst to ≤1 partial row per task, and BENCH/BASELINE.md
-    records the measurement — a flagged two-stage salted sum on a Zipf graph
-    with in-degree skew 594543× ran at 0.81× plain throughput (the extra
-    |V|-row exchange is pure overhead). PGS_SALT_AGG=1 opts it in for
-    aggregations where partial agg can't combine. Explicit ``salt_buckets``
-    forces the legacy all-keys salted sum; PGS_SALT_DISABLE=1 forces plain
-    everywhere.
+    Hub *in*-degree is measured and recorded in every manifest
+    (`skew_ratio_dst`) but needs no salting: map-side partial aggregation
+    already compresses a hub dst to at most one partial row per task
+    (a flagged two-stage salted sum measured 0.81× plain throughput).
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -154,9 +144,7 @@ def pagerank(
     # in-degree ratio is exactly the per-superstep gather skew (contribs is
     # keyed by dst, one row per edge); the out-degree ratio is the hub-block
     # straggler signal the side salting fixes — outdeg counts EDGES per src
-    # even in weighted mode (block size, not mass, skews a task). `indeg` is
-    # kept as a definition for the opt-in salted-agg branch below.
-    indeg = edges.groupBy("dst").agg(F.count("*").alias("indeg"))
+    # even in weighted mode (block size, not mass, skews a task).
     srows = (
         edges.select(
             F.explode(
@@ -184,8 +172,6 @@ def pagerank(
     skew_ratio_src = round(max_outdeg / avg_outdeg, 2) if avg_outdeg else 1.0
 
     salt_min_degree = int(os.environ.get("PGS_SALT_MIN_DEGREE", "100000"))
-    salt_ratio = float(os.environ.get("PGS_SALT_RATIO", "16"))
-    disable = bool(os.environ.get("PGS_SALT_DISABLE"))
     # A hub block is a straggler only when it clearly exceeds one partition's
     # worth of join work (measured 1.4-2.4x wins once the hub's partition is
     # ~3x the average in the one-wave regime; a wash when extra scheduling
@@ -193,20 +179,10 @@ def pagerank(
     # is pure overhead.
     partition_share = n_edges_total / max(num_partitions, 1)
     auto_salt_join = (
-        salt_buckets is None
-        and not disable
-        and max_outdeg >= salt_min_degree
-        and max_outdeg >= salt_ratio * avg_outdeg
+        max_outdeg >= salt_min_degree
+        and max_outdeg >= SALT_RATIO * avg_outdeg
         and max_outdeg >= 1.5 * partition_share
     )
-    auto_salt_agg = (
-        salt_buckets is None
-        and not disable
-        and bool(os.environ.get("PGS_SALT_AGG"))
-        and max_indeg >= salt_min_degree
-        and max_indeg >= salt_ratio * avg_indeg
-    )
-    n_hot_keys = 0
     n_hot_src = 0
     auto_buckets = min(num_partitions, 32)
 
@@ -221,7 +197,7 @@ def pagerank(
     w_edges = edges.join(outdeg, "src").select("src", "dst", contrib_w.alias("w"))
     heavy_src = None
     if auto_salt_join:
-        hot_thresh = max(float(salt_min_degree), salt_ratio * avg_outdeg)
+        hot_thresh = max(float(salt_min_degree), SALT_RATIO * avg_outdeg)
         heavy_src = (
             edges.groupBy("src").agg(F.count("*").alias("od"))
             .filter(F.col("od") >= hot_thresh)
@@ -242,14 +218,6 @@ def pagerank(
         )
         w_edges = w_edges.repartition(num_partitions, "src", "_salt").persist()
     else:
-        if auto_salt_agg:
-            # flag hub dst keys for the opt-in two-stage salted aggregation
-            hot_thresh = max(float(salt_min_degree), salt_ratio * avg_indeg)
-            heavy = indeg.filter(F.col("indeg") >= hot_thresh).select("dst")
-            n_hot_keys = heavy.count()
-            w_edges = w_edges.join(
-                F.broadcast(heavy.withColumn("hot", F.lit(True))), "dst", "left"
-            ).select("src", "dst", "w", F.coalesce("hot", F.lit(False)).alias("hot"))
         w_edges = w_edges.repartition(num_partitions, "src").persist()
     w_edges.count()  # materialize before the loop
 
@@ -316,9 +284,7 @@ def pagerank(
         # a broadcast of the full rank vector — a *serial* build that caps
         # scaling, Amdahl — or a sort-merge join that re-sorts the edges every
         # superstep.)
-        out_cols = ["dst", (F.col("rank") * F.col("w")).alias("contrib")] + (
-            ["hot"] if auto_salt_agg else []
-        )
+        out_cols = ["dst", (F.col("rank") * F.col("w")).alias("contrib")]
         if auto_salt_join:
             # SALTED HASH JOIN: hub src keys need their rank at every salt in
             # [0, buckets); cold keys only at salt 0. The replicated side is
@@ -343,14 +309,7 @@ def pagerank(
                 ranks.select("id", "rank").hint("shuffle_hash"),
                 w_edges.src == F.col("id"),
             ).select(*out_cols)
-        if salt_buckets:
-            gathered = skew.salted_sum(contribs, "dst", "contrib", salt_buckets)
-        elif auto_salt_agg:
-            gathered = skew.salted_sum_flagged(
-                contribs, "dst", "contrib", auto_buckets, "hot"
-            )
-        else:
-            gathered = contribs.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
+        gathered = contribs.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
         # ONE job per superstep: pre-join the old ranks (co-hashed |V|-row
         # join), attach delta + next-superstep dangling mass as observed
         # metrics, and let the snapshot WRITE be the action that yields them.
@@ -403,14 +362,10 @@ def pagerank(
             "shuffle_read_bytes": sb1[1] - sb0[1],
             "skew_ratio_dst": skew_ratio_dst,
             "skew_ratio_src": skew_ratio_src,
-            "salted": bool(salt_buckets or auto_salt_agg or auto_salt_join),
             "salted_join": auto_salt_join,
-            "n_hot_keys": n_hot_keys,
             "n_hot_src": n_hot_src,
             "extrapolated": False,
         }
-        if collect_skew_metrics:
-            metrics["skew_ratio_dst_live"] = skew.skew_ratio(contribs, "dst")
         history.append(metrics)
         cp.write_manifest(it + 1, metrics)
 

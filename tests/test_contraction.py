@@ -58,3 +58,25 @@ def test_merge_to_k_checkpoint_resume(spark, tmp_path):
     # converged checkpoint short-circuits a third call
     again = merge_to_k(spark, e, k=5, max_rounds=8, checkpoint_dir=cp)
     assert {r["id"]: r["group"] for r in again.groups.collect()} == b
+
+
+def test_failed_round_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    """A round that raises mid-way (here: its checkpoint write) must still
+    unpersist the round's cached `sizes`/`mapping` tables and the input."""
+    import pytest
+
+    from pgs_spark.streaming.checkpoint import CheckpointManager
+
+    real_save = CheckpointManager.save
+
+    def failing_save(self, df, iteration, *args, suffix="", **kw):
+        if suffix == "g":
+            raise RuntimeError("checkpoint write failed")
+        return real_save(self, df, iteration, *args, suffix=suffix, **kw)
+
+    monkeypatch.setattr(CheckpointManager, "save", failing_save)
+    e = edges_df(spark, random_graph(40, 0.1, seed=5))
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="checkpoint write failed"):
+        merge_to_k(spark, e, k=3, max_rounds=4, checkpoint_dir=str(tmp_path / "ck"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

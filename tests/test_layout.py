@@ -184,3 +184,11 @@ def test_layout_init_positions_and_iter_timing(spark):
     assert all(0.0 <= x <= 1.0 and 0.0 <= y <= 1.0 for x, y in pa.values())
     assert [h["iteration"] for h in a.history] == [1, 2]
     assert all(h["seconds"] > 0 for h in a.history)
+
+
+def test_layout_drops_its_temp_views(spark):
+    """The superstep's `__pgs_fr_*` temp views must not stay in the session
+    catalog after fr_layout returns."""
+    fr_layout(spark, edges_df(spark, TWO_CLIQUES), iterations=2)
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("__pgs_fr_")]
+    assert left == []

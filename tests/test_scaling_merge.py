@@ -25,11 +25,9 @@ def _level(cpus, median, eps):
         "median_superstep_secs": median,
         "total_superstep_secs": median * 9,
         "edges_per_sec_per_superstep": eps,
-        "salted": False,
         "salted_join": False,
         "skew_ratio_dst": 1.0,
         "skew_ratio_src": 1.0,
-        "n_hot_keys": 0,
         "n_hot_src": 0,
         "repeats": [{"median_superstep_secs": median, "ext_loadavg_before": "5.0"}],
     }
