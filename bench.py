@@ -196,16 +196,6 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
     extra["edges_per_sec_per_superstep"] = round(
         extra["code_edges"] * res.iterations / superstep_secs, 1
     )
-    # λ-extrapolated variant (TangencyPack.java:248-296 graft) — measured
-    # superstep-count reduction at the same tolerance, every round.
-    query_loadavg["pagerank_code_graph_lambda"] = round(os.getloadavg()[0], 1)
-    t0 = time.time()
-    res_x = pagerank(spark, code_edges, tol=1e-6, max_iter=100, extrapolate=True)
-    timings["pagerank_code_graph_lambda"] = round(time.time() - t0, 3)
-    extra["pagerank_supersteps_lambda"] = res_x.iterations
-    extra["pagerank_lambda_jumps"] = sum(
-        1 for h in res_x.history if h.get("extrapolated")
-    )
     cf.unpersist()
     refs.unpersist()
 

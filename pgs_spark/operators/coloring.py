@@ -127,6 +127,7 @@ def jones_plassmann(
     start_round = 0
     n_colored = 0
     resumed_converged = False
+    colored = None
     if checkpoint_dir is not None:
         from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
@@ -136,15 +137,10 @@ def jones_plassmann(
             f"{fingerprint_edges(undirected_edges)}|seed={seed}",
         )
         rp = cp.resume_point()
-        if rp is None:
-            cp.clear()  # stale state from a different input/seed — never mix
-            colored = None
-        else:
+        if rp is not None:
             start_round, colored, m = rp
             n_colored = int(m.get("n_colored", 0))
             resumed_converged = bool(m.get("converged", False))
-    else:
-        colored = None
     if colored is None:
         colored = spark.createDataFrame([], "id long, color long")
         colored = _snap(colored, "colored_0")

@@ -10,8 +10,9 @@ per-component stars centered on the component's minimum vertex id — which also
 satisfies the FIXTURES.md invariant that a component's id IS its min vertex id.
 
 Each round is two shuffles (one per star step); edge sets are deduplicated
-between rounds and lineage is truncated per round (localCheckpoint) so the
-driver loop stays flat.
+between rounds and each round's edge set is a parquet snapshot written through
+CheckpointManager, so lineage stays flat, round state stays off-heap, and the
+convergence signature rides the snapshot write.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pgs_spark.operators.state import snapshot as _snapshot
+from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
 
 
 def _signature(e: DataFrame) -> tuple[int, int]:
@@ -73,7 +74,6 @@ def connected_components(
     spark: SparkSession,
     edges: DataFrame,
     max_iter: int = 50,
-    work_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> ComponentsResult:
     """Edge table (src, dst), any orientation → (id, component).
@@ -87,7 +87,9 @@ def connected_components(
     fingerprint, round signature, and per-partition lineage; a restarted call
     with the same dir and input resumes from the newest round instead of
     round 0 — a multi-hour CC at cluster scale survives a driver restart.
-    The convergence signature rides the checkpoint write via observe()."""
+    Without it the same rounds go to an ephemeral directory (no fingerprint
+    or lineage jobs). The convergence signature rides the checkpoint write
+    via observe()."""
     verts = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
@@ -100,25 +102,19 @@ def connected_components(
         .distinct()
         .persist()
     )
-    cp = None
-    start_round = 0
-    sig = None
-    resumed_converged = False
-    if checkpoint_dir is not None:
-        from pgs_spark.streaming.checkpoint import CheckpointManager, fingerprint_edges
-
-        cp = CheckpointManager(spark, checkpoint_dir, fingerprint_edges(edges))
-        rp = cp.resume_point()
-        if rp is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            start_round, e_cp, m = rp
-            e.unpersist()
-            e = e_cp
-            sig = (int(m.get("edges", 0)), int(m.get("sig_h", 0)))
-            resumed_converged = bool(m.get("converged", False))
-    if sig is None:
-        sig = _signature(e)
+    durable = checkpoint_dir is not None
+    cp = CheckpointManager(
+        spark, checkpoint_dir, fingerprint_edges(edges) if durable else ""
+    )
+    rp = cp.resume_point()
+    if rp is None:
+        start_round, resumed_converged, sig = 0, False, _signature(e)
+    else:
+        start_round, e_cp, m = rp
+        e.unpersist()
+        e = e_cp
+        sig = (int(m.get("edges", 0)), int(m.get("sig_h", 0)))
+        resumed_converged = bool(m.get("converged", False))
     history = [{"round": start_round, "edges": sig[0]}]
     rounds = start_round
     # Round wall clock on small graphs is stage-scheduling latency, so size
@@ -139,49 +135,27 @@ def connected_components(
                 rounds = start_round
                 break
             new_e = _small_star(_large_star(e))
-            if cp is not None:
-                # durable round state: signature rides the manifest write
-                obs = Observation()
-                observed = new_e.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-                )
-                holder = {}
+            # round state: the signature rides the snapshot write
+            obs = Observation()
+            observed = new_e.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("u", "v")).alias("h"),
+            )
+            holder = {}
 
-                def _mfn(obs=obs, holder=holder, prev_sig=sig):
-                    vals = obs.get
-                    holder["sig"] = (int(vals["n"] or 0), int(vals["h"] or 0))
-                    return {
-                        "edges": holder["sig"][0],
-                        "sig_h": holder["sig"][1],
-                        "converged": holder["sig"] == prev_sig,
-                    }
-
-                new_e = cp.save(observed, rounds, metrics_fn=_mfn, lineage=True)
-                cp.prune(keep_last=2)
-                new_sig = holder["sig"]
-            elif work_dir:
-                # off-heap round state (large graphs): the convergence
-                # signature rides the parquet WRITE job via observe() — one
-                # job per round instead of write + full re-read (the re-read
-                # is a whole extra pass over the edge set at cluster scale).
-                obs = Observation()
-                observed = new_e.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-                )
-                new_e = _snapshot(observed, work_dir, f"round_{rounds % 2}")
+            def _mfn():
                 vals = obs.get
-                new_sig = (int(vals["n"] or 0), int(vals["h"] or 0))
-            else:
-                # lazy localCheckpoint: the signature action below
-                # materializes it — one job per round, lineage still
-                # truncated (small graphs). coalesce first: repeated
-                # checkpoint unions would otherwise accumulate partitions.
-                new_e = new_e.coalesce(round_p).localCheckpoint(eager=False)
-                new_sig = _signature(new_e)
+                holder["sig"] = (int(vals["n"] or 0), int(vals["h"] or 0))
+                return {
+                    "edges": holder["sig"][0],
+                    "sig_h": holder["sig"][1],
+                    "converged": holder["sig"] == sig,
+                }
+
+            new_e = cp.save(observed, rounds, metrics_fn=_mfn, lineage=durable)
+            cp.prune(keep_last=2)
+            new_sig = holder["sig"]
             e.unpersist()
             e = new_e
             history.append({"round": rounds, "edges": new_sig[0]})

@@ -14,9 +14,9 @@ GeneticColoring stopping rule: iterate until conflict count is 0,
 commons/GeneticColoring.java:41-95), with a max-superstep guard.
 
 Superstep state (|V| label rows) snapshots to parquet via CheckpointManager —
-the same off-heap fix PageRank/CC got: localCheckpoint keeps every superstep's
-rows as deserialized on-heap RDD blocks that unpersist() cannot free; at 20M
-vertices that produced multi-second Full-GC pauses every superstep. With a
+the same off-heap fix PageRank/CC got: checkpointed RDD blocks keep every
+superstep's rows deserialized on the heap, where unpersist() cannot free them;
+at 20M vertices that produced multi-second Full-GC pauses every superstep. With a
 durable ``checkpoint_dir`` the run also resumes mid-convergence (manifest
 carries iteration + changed-count; input fingerprint guards cross-input reuse).
 """
@@ -79,23 +79,16 @@ def label_propagation(
         labels = verts.select("id", F.col("id").alias("label"))
 
     durable = checkpoint_dir is not None
-    if not durable:
-        from pgs_spark.operators.state import make_work_dir
-
-        checkpoint_dir = make_work_dir("pgs_lpa_")
     cp = CheckpointManager(
         spark, checkpoint_dir, fingerprint_edges(undirected_edges) if durable else ""
     )
     start_iter = 0
-    if durable:
-        resumed = cp.resume_point()
-        if resumed is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            start_iter, labels, m = resumed
-            if m.get("changed", 1) == 0:
-                sym.unpersist()
-                return LPAResult(labels.select("id", "label"), start_iter, True, [])
+    resumed = cp.resume_point()
+    if resumed is not None:
+        start_iter, labels, m = resumed
+        if m.get("changed", 1) == 0:
+            sym.unpersist()
+            return LPAResult(labels.select("id", "label"), start_iter, True, [])
     if start_iter == 0:
         labels = cp.save(labels, 0, lineage=False)  # init state off-heap too
 
@@ -133,22 +126,24 @@ def label_propagation(
             obs,
             F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed"),
         ).select("id", "label")
-        new_labels = cp.save(observed, it, lineage=False)
-        changed = int(obs.get["changed"] or 0)
-        labels = new_labels
+
+        def _metrics():
+            # runs after the write job the changed-count is observed on, so
+            # the superstep's one manifest carries it
+            sb1 = shuffle_bytes(spark)
+            history.append({
+                "iteration": it,
+                "changed": int(obs.get["changed"] or 0),
+                "seconds": time.time() - t0,
+                "shuffle_write_bytes": sb1[0] - sb0[0],
+                "shuffle_read_bytes": sb1[1] - sb0[1],
+            })
+            return history[-1]
+
+        labels = cp.save(observed, it, lineage=False, metrics_fn=_metrics)
         iterations = it
-        sb1 = shuffle_bytes(spark)
-        m = {
-            "iteration": it,
-            "changed": changed,
-            "seconds": time.time() - t0,
-            "shuffle_write_bytes": sb1[0] - sb0[0],
-            "shuffle_read_bytes": sb1[1] - sb0[1],
-        }
-        history.append(m)
-        cp.write_manifest(it, m)
         cp.prune(keep_last=2)
-        if changed == 0:
+        if history[-1]["changed"] == 0:
             converged = True
             break
     sym.unpersist()

@@ -141,9 +141,7 @@ def fr_layout(
             + ("|init=custom" if init_positions is not None else ""),
         )
         rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
+        if rp is not None:
             start_it, pos, _ = rp
 
     work_dir = make_work_dir("pgs_fr_")
@@ -438,9 +436,7 @@ def repulsion_circle_pack(
             spark, checkpoint_dir, f"{fp_row['n']}:{fp_row['h']}|it={iterations}"
         )
         rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
+        if rp is not None:
             start_it, pos, _ = rp
 
     work_dir = make_work_dir("pgs_pack_")

@@ -141,9 +141,7 @@ def kcore(
             f"{fingerprint_edges(undirected_edges)}|k={k}|rounds={rounds}",
         )
         rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
+        if rp is not None:
             start_round, e, m = rp
             if m.get("converged"):
                 return e

@@ -23,23 +23,11 @@ Spark plan per superstep (sparse gather-scatter — ONE job):
 
 State per superstep is |V| rows — tiny relative to |E| — so checkpointing every
 iteration is cheap and gives both flat lineage and mid-convergence resume.
-
-Opt-in λ-extrapolation (``extrapolate=True``) grafts TangencyPack's
-accelerated superstep solver (commons/TangencyPack.java:248-296: snapshot two
-successive iterates, extrapolate along their difference): power-iteration
-error contracts geometrically with ratio λ ≈ delta_t/delta_{t-1}, so
-r* ≈ r_t + (r_t − r_{t-1})·λ/(1−λ). Every 3rd superstep the engine applies
-that jump (dangling mass of the jumped vector re-measured exactly via
-observe), and disables itself if the following real superstep's delta does
-not improve on the pre-jump delta. Convergence is still certified by a REAL
-superstep's residual < tol, so converged ranks agree with the plain path
-within the tolerance (allclose-tested).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -70,7 +58,6 @@ def pagerank(
     num_partitions: int | None = None,
     fixed_iterations: int | None = None,
     weight_col: str | None = None,
-    extrapolate: bool = False,
     personalize_mod: int | None = None,
 ) -> PageRankResult:
     """Power-iteration PageRank over a directed edge table (src, dst).
@@ -221,35 +208,29 @@ def pagerank(
         w_edges = w_edges.repartition(num_partitions, "src").persist()
     w_edges.count()  # materialize before the loop
 
-    # Superstep state ALWAYS snapshots to parquet: |V| rows is cheap, lineage
-    # stays flat, and — critically — the state lives off-heap (OS page cache).
-    # localCheckpoint keeps every superstep's rows as deserialized on-heap RDD
-    # blocks that unpersist() cannot free; at 20M vertices that produced
-    # multi-second Full GC pauses every superstep.
+    # Superstep state ALWAYS snapshots to parquet (an ephemeral dir unless
+    # durable): |V| rows is cheap, lineage stays flat, and — critically — the
+    # state lives off-heap (OS page cache). Checkpointed RDD blocks keep every
+    # superstep's rows deserialized on the heap, where unpersist() cannot free
+    # them promptly; at 20M vertices that produced multi-second Full GC pauses
+    # every superstep.
     start_iter = 0
     ranks = None
     d_mass = float(n_dangling) / n  # all ranks equal at iter 0 → analytic
     history: list[dict] = []
-    durable = checkpoint_dir is not None
-    tmp_dir = None
-    if not durable:
-        from pgs_spark.operators.state import make_work_dir
-
-        checkpoint_dir = tmp_dir = make_work_dir("pgs_pr_")
-    cp = CheckpointManager(spark, checkpoint_dir, fingerprint_edges(edges))
-    if durable:
-        resumed = cp.resume_point()
-        if resumed is None:
-            cp.clear()  # stale state from a different input — never mix
-        else:
-            start_iter, ranks, m = resumed
-            d_mass = m.get("dangling_mass", d_mass)
-            if m.get("delta", 1.0) < tol and fixed_iterations is None:
-                vstate.unpersist()  # early return must not leak cached state
-                w_edges.unpersist()
-                if heavy_src is not None:
-                    heavy_src.unpersist()
-                return PageRankResult(ranks.select("id", "rank"), start_iter, True, history)
+    cp = CheckpointManager(
+        spark, checkpoint_dir, fingerprint_edges(edges) if checkpoint_dir is not None else ""
+    )
+    resumed = cp.resume_point()
+    if resumed is not None:
+        start_iter, ranks, m = resumed
+        d_mass = m.get("dangling_mass", d_mass)
+        if m.get("delta", 1.0) < tol and fixed_iterations is None:
+            vstate.unpersist()  # early return must not leak cached state
+            w_edges.unpersist()
+            if heavy_src is not None:
+                heavy_src.unpersist()
+            return PageRankResult(ranks.select("id", "rank"), start_iter, True, history)
     if ranks is None:
         ranks = vstate.select("id", F.lit(1.0 / n).alias("rank"))
 
@@ -268,11 +249,6 @@ def pagerank(
     converged = False
 
     from pgs_spark.session import shuffle_bytes
-
-    # λ-extrapolation state (opt-in; never in fixed-iteration/oracle mode)
-    prev_delta: float | None = None
-    ext_enabled = extrapolate and fixed_iterations is None
-    ext_pending_delta: float | None = None  # pre-jump delta, for the fallback
 
     for it in range(start_iter, limit):
         t0 = time.time()
@@ -348,79 +324,31 @@ def pagerank(
                 F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
             ).alias("d_mass"),
         ).select("id", "rank")
-        new_ranks = cp.save(observed, it + 1, lineage=False)
-        stats = obs.get  # already available — the write above was the action
-        delta = float(stats["delta"])
-        d_mass = float(stats["d_mass"] or 0.0)
-        sb1 = shuffle_bytes(spark)
-        metrics = {
-            "iteration": it + 1,
-            "delta": delta,
-            "dangling_mass": d_mass,
-            "seconds": time.time() - t0,
-            "shuffle_write_bytes": sb1[0] - sb0[0],
-            "shuffle_read_bytes": sb1[1] - sb0[1],
-            "skew_ratio_dst": skew_ratio_dst,
-            "skew_ratio_src": skew_ratio_src,
-            "salted_join": auto_salt_join,
-            "n_hot_src": n_hot_src,
-            "extrapolated": False,
-        }
-        history.append(metrics)
-        cp.write_manifest(it + 1, metrics)
 
-        # λ-extrapolation fallback: if the real superstep after a jump did not
-        # beat the pre-jump delta, the error is not yet in its geometric
-        # regime — stop jumping (plain power iteration always converges).
-        if ext_pending_delta is not None:
-            if delta >= ext_pending_delta:
-                ext_enabled = False
-            ext_pending_delta = None
-        elif (
-            ext_enabled
-            and prev_delta is not None
-            and prev_delta > 0.0
-            and delta > tol
-            and (it + 1 - start_iter) % 3 == 0
-        ):
-            lam = delta / prev_delta
-            # jump only inside the geometric regime; λ→1 would divide by ~0
-            if 0.05 < lam < 0.98:
-                factor = lam / (1.0 - lam)
-                ext_pre = (
-                    new_ranks.select("id", F.col("rank").alias("r2"))
-                    .join(ranks.select("id", F.col("rank").alias("r1")), "id")
-                    .join(vstate, "id")
-                    .select(
-                        "id",
-                        "outdeg",
-                        (
-                            F.col("r2") + (F.col("r2") - F.col("r1")) * F.lit(factor)
-                        ).alias("rank"),
-                    )
-                )
-                ext_obs = Observation()
-                ext_observed = ext_pre.observe(
-                    ext_obs,
-                    F.sum(
-                        F.when(F.col("outdeg").isNull(), F.col("rank")).otherwise(0.0)
-                    ).alias("d_mass"),
-                ).select("id", "rank")
-                plain_path = getattr(new_ranks, "_pgs_snapshot_path", None)
-                new_ranks = cp.save(ext_observed, it + 1, lineage=False, suffix="x")
-                d_mass = float(ext_obs.get["d_mass"] or 0.0)
-                if plain_path:
-                    # the plain snapshot fed the jump and its manifest was
-                    # superseded — drop it so prune() bookkeeping stays exact
-                    shutil.rmtree(plain_path, ignore_errors=True)
-                ext_pending_delta = delta
-                metrics["extrapolated"] = True
-                metrics["dangling_mass"] = d_mass  # resume must see the jumped mass
-                cp.write_manifest(it + 1, metrics, suffix="x")
+        def _metrics():
+            # runs after the write job (the stats are observed on it) and
+            # BEFORE the manifest lands, so the superstep's one manifest
+            # carries the delta and dangling mass a resume needs
+            stats = obs.get
+            sb1 = shuffle_bytes(spark)
+            history.append({
+                "iteration": it + 1,
+                "delta": float(stats["delta"]),
+                "dangling_mass": float(stats["d_mass"] or 0.0),
+                "seconds": time.time() - t0,
+                "shuffle_write_bytes": sb1[0] - sb0[0],
+                "shuffle_read_bytes": sb1[1] - sb0[1],
+                "skew_ratio_dst": skew_ratio_dst,
+                "skew_ratio_src": skew_ratio_src,
+                "salted_join": auto_salt_join,
+                "n_hot_src": n_hot_src,
+            })
+            return history[-1]
 
+        ranks = cp.save(observed, it + 1, lineage=False, metrics_fn=_metrics)
         cp.prune(keep_last=2)
-        prev_delta = delta
-        ranks = new_ranks
+        delta = history[-1]["delta"]
+        d_mass = history[-1]["dangling_mass"]
         iterations = it + 1
         if fixed_iterations is None and delta < tol:
             converged = True

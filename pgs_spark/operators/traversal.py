@@ -47,9 +47,7 @@ def bfs_distances(
             f"{fingerprint_edges(undirected_edges)}|src={source}|hops={max_hops}",
         )
         rp = cp.resume_point()
-        if rp is None:
-            cp.clear()
-        else:
+        if rp is not None:
             start_hop, visited, m = rp
             if m.get("converged"):
                 sym.unpersist()

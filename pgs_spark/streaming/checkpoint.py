@@ -24,15 +24,22 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pgs_spark.operators.state import make_work_dir, snapshot
+
 
 class CheckpointManager:
-    """Manages `<dir>/state_<iter>/` parquet snapshots + `manifest_<iter>.json`."""
+    """Manages `<dir>/state_<iter>/` parquet snapshots + `manifest_<iter>.json`.
 
-    def __init__(self, spark: SparkSession, directory: str, input_fingerprint: str = ""):
+    ``directory=None`` puts the snapshots in an ephemeral directory
+    (`state.make_work_dir`): the same superstep path, minus durability."""
+
+    def __init__(
+        self, spark: SparkSession, directory: str | None, input_fingerprint: str = ""
+    ):
         self.spark = spark
-        self.dir = directory
+        self.dir = directory if directory is not None else make_work_dir("pgs_ckpt_")
         self.fingerprint = input_fingerprint
-        os.makedirs(directory, exist_ok=True)
+        os.makedirs(self.dir, exist_ok=True)
 
     # -- write ---------------------------------------------------------------
     def save(
@@ -45,30 +52,23 @@ class CheckpointManager:
         metrics_fn=None,
         manifest: bool = True,
     ) -> DataFrame:
-        """Persist one superstep's vertex state; returns the re-read DataFrame
-        (flat lineage, with its parquet path on `_pgs_snapshot_path`).
-        Per-partition lineage (row counts by partition) is recorded in the
-        manifest unless `lineage=False` (ephemeral checkpoints skip that
-        extra job). `suffix` distinguishes a sub-step snapshot of the same
-        iteration (e.g. a λ-extrapolation jump); NOTE the manifest filename
-        does NOT carry the suffix, so a suffixed save SUPERSEDES (overwrites)
-        the plain manifest of the same iteration — intentional for
-        sub-step-replaces-step semantics (λ jumps), hazardous for
-        independent sub-snapshots. Multi-state iterations should write the
-        secondary state with ``manifest=False`` FIRST and let the final
-        `save()` emit the one manifest referencing both paths, so a crash
-        between the two writes never publishes a half-round manifest.
-        `metrics_fn` (no-arg callable → dict) is evaluated AFTER
-        the parquet write action — the hook for Observation metrics that ride
-        the write job — and its result is merged over `metrics`, so observed
-        values land in the same manifest as the partition lineage without a
-        second write_manifest call."""
-        path = os.path.join(self.dir, f"state_{iteration:05d}{suffix}")
-        state.write.mode("overwrite").parquet(path)
-        # re-read with the schema we just wrote: skips the per-save driver
-        # footer-inference (~0.12s), which a superstep loop pays every round
-        reread = self.spark.read.schema(state.schema).parquet(path)
-        reread._pgs_snapshot_path = path
+        """Persist one superstep's vertex state and publish its ONE manifest;
+        returns the re-read DataFrame (flat lineage, with its parquet path on
+        `_pgs_snapshot_path`). Per-partition lineage (row counts by
+        partition) is recorded in the manifest unless `lineage=False`
+        (ephemeral checkpoints skip that extra job). `metrics_fn` (no-arg
+        callable → dict) is evaluated AFTER the parquet write action — the
+        hook for Observation metrics that ride the write job — and its result
+        is merged over `metrics`, so everything a resume needs lands in the
+        same manifest as the snapshot it describes.
+
+        Multi-state iterations write the secondary state with a distinct
+        `suffix` and ``manifest=False`` FIRST, then let the final `save()`
+        emit the one manifest referencing both paths, so a crash between the
+        two writes never publishes a half-round manifest."""
+        name = f"state_{iteration:05d}{suffix}"
+        reread = snapshot(state, self.dir, name)
+        reread._pgs_snapshot_path = path = os.path.join(self.dir, name)
         if not manifest:
             return reread
         if metrics_fn is not None:
@@ -81,56 +81,51 @@ class CheckpointManager:
                 .agg(F.count("*").alias("rows"))
                 .collect()
             ]
-        self.write_manifest(iteration, metrics, partitions=sorted(part_rows), suffix=suffix)
+        self._write_manifest(iteration, path, metrics, sorted(part_rows))
         return reread
 
-    def write_manifest(
-        self,
-        iteration: int,
-        metrics: dict | None,
-        partitions: list | None = None,
-        suffix: str = "",
+    def _write_manifest(
+        self, iteration: int, path: str, metrics: dict | None, partitions: list
     ) -> None:
-        """Emit `manifest_<iteration>.json`. The filename deliberately drops
-        `suffix`: a suffixed manifest OVERWRITES the plain manifest of the
-        same iteration (supersede semantics — the suffixed state replaces the
-        step). Callers that need both snapshots of an iteration recoverable
-        must put the secondary path in `metrics` of ONE manifest (see
-        `save(manifest=False)`), not write two manifests."""
+        """Publish `manifest_<iteration>.json` atomically: the document is
+        written under a `.tmp` name and renamed into place, so a crash
+        mid-write never leaves a torn manifest for `latest()` to read."""
         manifest = {
             "iteration": iteration,
-            "path": os.path.join(self.dir, f"state_{iteration:05d}{suffix}"),
+            "path": path,
             "input_fingerprint": self.fingerprint,
             "wall_clock": time.time(),
-            "partitions": partitions or [],
+            "partitions": partitions,
             "metrics": metrics or {},
         }
-        with open(os.path.join(self.dir, f"manifest_{iteration:05d}.json"), "w") as f:
+        final = os.path.join(self.dir, f"manifest_{iteration:05d}.json")
+        with open(final + ".tmp", "w") as f:
             json.dump(manifest, f)
+        os.replace(final + ".tmp", final)
 
     # -- read ----------------------------------------------------------------
-    def latest(self) -> dict | None:
-        """Newest manifest dict, or None if no checkpoint exists."""
+    def _manifest_names(self) -> list[str]:
+        """Published manifest filenames, oldest → newest (a `.tmp` never is)."""
         if not os.path.isdir(self.dir):
-            return None
-        manifests = sorted(
+            return []
+        return sorted(
             n for n in os.listdir(self.dir) if n.startswith("manifest_") and n.endswith(".json")
         )
-        if not manifests:
+
+    def latest(self) -> dict | None:
+        """Newest manifest dict, or None if no checkpoint exists."""
+        names = self._manifest_names()
+        if not names:
             return None
-        with open(os.path.join(self.dir, manifests[-1])) as f:
+        with open(os.path.join(self.dir, names[-1])) as f:
             return json.load(f)
 
     def manifests(self) -> list[dict]:
         """All manifest dicts, oldest → newest (filename order). Lets callers
         fall back past an incomplete newest manifest (e.g. a crash between a
         pair of per-iteration snapshots) to the last complete one."""
-        if not os.path.isdir(self.dir):
-            return []
         out = []
-        for n in sorted(
-            n for n in os.listdir(self.dir) if n.startswith("manifest_") and n.endswith(".json")
-        ):
+        for n in self._manifest_names():
             with open(os.path.join(self.dir, n)) as f:
                 out.append(json.load(f))
         return out
@@ -140,9 +135,12 @@ class CheckpointManager:
 
     def resume_point(self) -> tuple[int, DataFrame, dict] | None:
         """(iteration, state, metrics) of the newest checkpoint, if any, and
-        only if it belongs to the same input (fingerprint match)."""
+        only if it belongs to the same input (fingerprint match). Otherwise
+        the directory is cleared — stale state from a different input must
+        never mix with this run's snapshots — and None is returned."""
         m = self.latest()
         if m is None or m.get("input_fingerprint") != self.fingerprint:
+            self.clear()
             return None
         return m["iteration"], self.load(m), m.get("metrics", {})
 
@@ -158,10 +156,8 @@ class CheckpointManager:
 
     def prune(self, keep_last: int = 2) -> None:
         """Drop all but the newest `keep_last` snapshots (bounded storage)."""
-        manifests = sorted(
-            n for n in os.listdir(self.dir) if n.startswith("manifest_")
-        )
-        for name in manifests[:-keep_last] if keep_last else manifests:
+        names = self._manifest_names()
+        for name in names[:-keep_last] if keep_last else names:
             with open(os.path.join(self.dir, name)) as f:
                 m = json.load(f)
             shutil.rmtree(m["path"], ignore_errors=True)

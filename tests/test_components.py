@@ -82,3 +82,14 @@ def test_checkpoint_ignores_other_input(spark, tmp_path):
         spark, edges_df(spark, [(5, 6), (7, 8)]), checkpoint_dir=cp
     )
     assert _collect(other) == {5: 5, 6: 5, 7: 7, 8: 7}
+
+
+def test_leaves_no_cached_rdds(spark):
+    """Round state lives in parquet snapshots, not cached RDD blocks: a
+    non-durable run leaves the JVM's persistent-RDD registry as it found it."""
+    pairs = [(i, i + 1) for i in range(40)] + [(3, 17)]
+    registry = spark.sparkContext._jsc.getPersistentRDDs
+    before = registry().size()
+    res = connected_components(spark, edges_df(spark, pairs))
+    assert _collect(res) == {i: 0 for i in range(41)}
+    assert registry().size() == before
